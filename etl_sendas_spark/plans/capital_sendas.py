@@ -14,6 +14,12 @@ Faithfully reproduced code-vs-spec deviations (SURVEY.md §7):
   comment's "NS";
 - the month filter matches month-of-year only, not year+month (:142).
 
+Rules: each validation rule is written once, as an entry of the ordered
+:data:`RULE_TABLE` (optional mark set + CASE branches). :func:`apply_rules`
+folds the whole table into one plan; the per-rule entry points
+(``rule_qx`` … ``rule_rm``) are the same fold over a single entry. R4
+compares invoices null-as-empty, like the reference's ``fillna('')``.
+
 Scale notes: the fact table is the only big input — every dim join is
 a broadcast; the rule engine shuffles only on its group keys
 (invoice, patient); nothing collects to the driver; the one Python
@@ -23,17 +29,16 @@ Arrow-batched.
 
 from __future__ import annotations
 
+from collections.abc import Callable, Iterable
+from dataclasses import dataclass
+from functools import reduce
+
 from pyspark.sql import Column, DataFrame, functions as F
 
 from ..functions.dates import parse_js_timestamp, edad_valor, edad_unidad, date_to_text
 from ..functions.strings import split_full_name
 from ..operators.marking import capped_group_mark, gap_anchor_mark
-from ..operators.relational import (
-    first_flag,
-    invoices_containing,
-    keep_first,
-    update_by_row_id,
-)
+from ..operators.relational import first_flag, keep_first
 from ..sources.readers import ROW_ID, with_row_id
 
 H1_H5 = ["H1", "H2", "H3", "H4", "H5"]
@@ -203,9 +208,16 @@ def enrich(
 # --------------------------------------------------------------------------
 # rule engine — ordered fold, later rules override earlier marks
 # --------------------------------------------------------------------------
+# The reference applies its rules in order, each overwriting
+# ``validacion`` on its own scope. No rule reads another's output, so
+# every mark set is computed from the SAME enriched frame and the fold
+# order becomes a precedence: the highest-ranked mark per row wins, and
+# the CASE lists the rules' branches latest-first.
 
 def _qx_marks(fact: DataFrame) -> DataFrame:
-    """R1 mark set: every scope row with its 0/1 flag."""
+    """R1 Quirófano (:326-380): within (FACTURA, FEC_SERVICIO), walking
+    tipologia descending, ≤2 marks per tipologia run and ≤3 in total;
+    every scope row is written, 0 or 1."""
     scope = fact.filter(
         _nz("tipologia").startswith("Qx") & (F.col("VALOR_TOTAL") > 0)
     ).select(ROW_ID, "FACTURA", "FEC_SERVICIO", "tipologia")
@@ -220,7 +232,9 @@ def _qx_marks(fact: DataFrame) -> DataFrame:
 
 
 def _egreso_marks(fact: DataFrame) -> DataFrame:
-    """R2 mark set: kept first-rows only, flag 1."""
+    """R2 Egreso (:383-410): first row per key → 1; the H1–H5 key
+    includes NOM_CENTROCOS, other H* does not. Only kept rows are
+    written."""
     scope = fact.filter(_nz("tipologia").startswith("H")).select(
         ROW_ID, "FACTURA", "SERVICIO", "NOM_CENTROCOS", "tipologia"
     )
@@ -236,7 +250,7 @@ def _egreso_marks(fact: DataFrame) -> DataFrame:
 
 
 def _c1_marks(fact: DataFrame) -> DataFrame:
-    """R3 mark set: first service per patient-day, flag 1."""
+    """R3 Ambulatorio C1 (:415-429): first service per patient-day → 1."""
     scope = fact.filter(
         (F.col("tipologia") == "C1") & _nz("COD_PLAN").startswith("PGP")
     ).select(ROW_ID, "DOC_PACIENTE", "FEC_SERVICIO")
@@ -245,64 +259,38 @@ def _c1_marks(fact: DataFrame) -> DataFrame:
     )
 
 
-def rule_qx(fact: DataFrame) -> DataFrame:
-    """R1 Quirófano (:326-380): within (FACTURA, FEC_SERVICIO), walking
-    tipologia descending, mark ≤2 per tipologia run and ≤3 total."""
-    return update_by_row_id(fact, _qx_marks(fact), "validacion")
+def _c4_scope() -> Column:
+    return (F.col("AMBITO") == "CONSULTA EXTERNA") & (F.col("tipologia") == "C4")
 
 
-def rule_egreso(fact: DataFrame) -> DataFrame:
-    """R2 Egreso (:383-410): first row per key → 1; H1–H5 key includes
-    NOM_CENTROCOS, other H* does not. Only kept rows are written."""
-    return update_by_row_id(fact, _egreso_marks(fact), "validacion")
+def _c4_zero_marks(fact: DataFrame) -> DataFrame:
+    """R4's invoice-membership zeroing (:431-456) as a mark set: C4
+    consulta-externa rows whose SERVICIO is in the invalidation list
+    AND whose invoice carries a 132P01 row get 0.
 
-
-def rule_c1(fact: DataFrame) -> DataFrame:
-    """R3 Ambulatorio C1 (:415-429): first service per patient-day → 1."""
-    return update_by_row_id(fact, _c1_marks(fact), "validacion")
-
-
-def rule_c4(fact: DataFrame) -> DataFrame:
-    """R4 Ambulatorio C4 (:431-456): CASE chain + invoice-membership
-    zeroing; the 132P01 flag is a window over FACTURA (no self-join,
-    no driver round-trip — replaces the reference's unique()+isin)."""
-    has_132 = invoices_containing(fact, "FACTURA", "SERVICIO", "132P01")
-    base = (F.col("AMBITO") == "CONSULTA EXTERNA") & (F.col("tipologia") == "C4")
-    servicios_a_invalidar = ["890285", "890385", "890384", "890284", "890502"]
-    return fact.withColumn(
-        "validacion",
-        F.when(base & has_132 & F.col("SERVICIO").isin(servicios_a_invalidar), F.lit(0))
-        .when(base & (F.col("SERVICIO") == "890502"), F.col("CANT_SERVICIO"))
-        .when(base & (F.col("SERVICIO") != "890502"), F.lit(1))
-        .otherwise(F.col("validacion")),
+    Both semi-join sides are narrow (scoped row ids, distinct 132P01
+    invoices), so the wide frame crosses no exchange for this flag.
+    Invoices compare null-as-empty on both sides — the reference's
+    ``fillna('')`` + ``isin`` — so a NULL-invoice row is zeroed when
+    another NULL-invoice row carries 132P01."""
+    has132 = (
+        fact.filter(F.col("SERVICIO") == "132P01")
+        .select(_nz("FACTURA").alias("__inv"))
+        .distinct()
     )
-
-
-def rule_c7_c8(fact: DataFrame) -> DataFrame:
-    """R5 (:458-467): C7 → CANT_SERVICIO; C8 in consulta externa → CANT_SERVICIO."""
-    return fact.withColumn(
-        "validacion",
-        F.when(F.col("tipologia") == "C7", F.col("CANT_SERVICIO"))
-        .when(
-            (F.col("tipologia") == "C8") & (F.col("AMBITO") == "CONSULTA EXTERNA"),
-            F.col("CANT_SERVICIO"),
-        )
-        .otherwise(F.col("validacion")),
-    )
-
-
-def rule_hd_ari(fact: DataFrame) -> DataFrame:
-    """R6 (:470-481): HD → 1, ARI → 1."""
-    return fact.withColumn(
-        "validacion",
-        F.when(F.col("tipologia").isin("HD", "ARI"), F.lit(1)).otherwise(
-            F.col("validacion")
-        ),
+    scope = fact.filter(
+        _c4_scope()
+        & F.col("SERVICIO").isin("890285", "890385", "890384", "890284", "890502")
+    ).select(ROW_ID, _nz("FACTURA").alias("__inv"))
+    return scope.join(has132, "__inv", "left_semi").select(
+        ROW_ID, F.lit(0).alias("validacion")
     )
 
 
 def _c5_marks(fact: DataFrame) -> DataFrame:
-    """R7 mark set: INGRESO-deduped C5 rows with the gap-fold 0/1 flag."""
+    """R7 Consultorio urgencias (:484-543): C5 rows deduped on INGRESO
+    in (patient, dx, date) order, then the anchor-reset >3-day gap fold
+    per (patient, dx) — the engine's one grouped-map stage."""
     scope = fact.filter(F.col("tipologia") == "C5").select(
         ROW_ID,
         "INGRESO",
@@ -325,8 +313,8 @@ def _c5_marks(fact: DataFrame) -> DataFrame:
 
 
 def _qx1_marks(fact: DataFrame) -> DataFrame:
-    """R8 mark set: every Qx1 scope row, 1 for the first per
-    (FACTURA, SERVICIO), 0 for the rest."""
+    """R8 Parto/cesárea (:546-559): every Qx1 row, 1 for the first per
+    (FACTURA, SERVICIO), 0 for the rest (this overwrites R1 marks)."""
     scope = fact.filter(F.col("tipologia") == "Qx1").select(
         ROW_ID, "FACTURA", "SERVICIO"
     )
@@ -335,179 +323,150 @@ def _qx1_marks(fact: DataFrame) -> DataFrame:
     )
 
 
-SERVICIOS_A_INVALIDAR = ["890285", "890385", "890384", "890284", "890502"]
+Branches = list[tuple[Column, Column]]
 
 
-def _c4_zero_marks(fact: DataFrame) -> DataFrame:
-    """R4's invoice-membership zeroing as a mark set (r13, guide §2.4):
-    rows in the C4 consulta-externa scope whose SERVICIO is in the
-    invalidation list AND whose invoice contains a 132P01 row get 0.
-
-    Replaces the ``invoices_containing`` window inside the one-pass
-    engine's final CASE — that window forced the full-width post-join
-    frame through an Exchange(FACTURA) + sort just to attach a boolean
-    consumed by a single branch. Here both join sides are NARROW (the
-    scoped row ids + the distinct 132P01 invoices), and the wide frame
-    crosses no extra exchange. C4 scope is disjoint from every other
-    mark set's scope (Qx*/H*/C1/C5/Qx1), so the rank-4 mark can never
-    shadow or be shadowed within a row — semantics identical to the
-    window branch (oracle-audited)."""
-    has132 = (
-        fact.filter(F.col("SERVICIO") == "132P01").select("FACTURA").distinct()
-    )
-    scope = fact.filter(
-        (F.col("AMBITO") == "CONSULTA EXTERNA")
-        & (F.col("tipologia") == "C4")
-        & F.col("SERVICIO").isin(SERVICIOS_A_INVALIDAR)
-    ).select(ROW_ID, "FACTURA")
-    return scope.join(has132, "FACTURA", "left_semi").select(
-        ROW_ID, F.lit(0).alias("validacion")
-    )
+def _marked(hit: Column, mark: Column) -> Branches:
+    return [(hit, mark)]
 
 
-def rule_c5(fact: DataFrame) -> DataFrame:
-    """R7 Consultorio urgencias (:484-543): zero all C5, dedup on
-    INGRESO in (patient, dx, date) order, then the anchor-reset >3-day
-    gap fold per (patient, dx) — the engine's one grouped-map stage."""
-    marks = _c5_marks(fact)
-    fact = fact.withColumn(
-        "validacion",
-        F.when(F.col("tipologia") == "C5", F.lit(0)).otherwise(F.col("validacion")),
-    )
-    return update_by_row_id(fact, marks, "validacion")
+@dataclass(frozen=True)
+class Rule:
+    """One entry of :data:`RULE_TABLE`. ``branches(hit, mark)`` returns
+    the rule's CASE branches, first match wins; ``hit`` is true on rows
+    whose winning mark is this rule's, ``mark`` is that mark's flag."""
+
+    branches: Callable[[Column, Column], Branches] = _marked
+    marks: Callable[[DataFrame], DataFrame] | None = None
 
 
-def rule_qx1(fact: DataFrame) -> DataFrame:
-    """R8 Parto/cesárea (:546-559): first (FACTURA, SERVICIO) row → 1,
-    the REST of the Qx1 scope → 0 (this rule overwrites R1 marks)."""
-    return update_by_row_id(fact, _qx1_marks(fact), "validacion")
+# The rules in reference order (:320-568) — table position is fold
+# position. The keys name the per-rule entry points below.
+RULE_TABLE: dict[str, Rule] = {
+    "qx": Rule(marks=_qx_marks),  # R1
+    "egreso": Rule(marks=_egreso_marks),  # R2
+    "c1": Rule(marks=_c1_marks),  # R3
+    # R4: the 132P01 zeroing wins within the rule, then 890502 →
+    # CANT_SERVICIO, every other C4 consulta-externa row → 1
+    "c4": Rule(
+        lambda hit, mark: [
+            (hit, mark),
+            (_c4_scope() & (F.col("SERVICIO") == "890502"), F.col("CANT_SERVICIO")),
+            (_c4_scope() & (F.col("SERVICIO") != "890502"), F.lit(1)),
+        ],
+        _c4_zero_marks,
+    ),
+    # R5 (:458-467): C7 → CANT_SERVICIO; C8 in consulta externa → CANT_SERVICIO
+    "c7_c8": Rule(
+        lambda hit, mark: [
+            (F.col("tipologia") == "C7", F.col("CANT_SERVICIO")),
+            (
+                (F.col("tipologia") == "C8") & (F.col("AMBITO") == "CONSULTA EXTERNA"),
+                F.col("CANT_SERVICIO"),
+            ),
+        ]
+    ),
+    # R6 (:470-481): HD → 1, ARI → 1
+    "hd_ari": Rule(
+        lambda hit, mark: [(F.col("tipologia").isin("HD", "ARI"), F.lit(1))]
+    ),
+    # R7: the gap-fold marks, then every other C5 row is zeroed (:487-488)
+    "c5": Rule(
+        lambda hit, mark: [(hit, mark), (F.col("tipologia") == "C5", F.lit(0))],
+        _c5_marks,
+    ),
+    "qx1": Rule(marks=_qx1_marks),  # R8
+    # R9 Resonancia (:562-568): RM → CANT_SERVICIO
+    "rm": Rule(
+        lambda hit, mark: [(F.col("tipologia") == "RM", F.col("CANT_SERVICIO"))]
+    ),
+}
 
 
-def rule_rm(fact: DataFrame) -> DataFrame:
-    """R9 Resonancia (:562-568): RM → CANT_SERVICIO."""
-    return fact.withColumn(
-        "validacion",
-        F.when(F.col("tipologia") == "RM", F.col("CANT_SERVICIO")).otherwise(
-            F.col("validacion")
-        ),
-    )
-
-
-RULES = [
-    rule_qx,
-    rule_egreso,
-    rule_c1,
-    rule_c4,
-    rule_c7_c8,
-    rule_hd_ari,
-    rule_c5,
-    rule_qx1,
-    rule_rm,
-]
-
-
-def apply_rules_sequential(fact: DataFrame) -> DataFrame:
-    """The literal ordered fold — each rule overwrites its scope in
-    turn. Reference semantics made explicit, and what the unit tests
-    exercise per-rule; but every ``update_by_row_id`` embeds ``fact``'s
-    lineage twice, so the composed plan grows exponentially with the
-    number of join-based rules. Use :func:`apply_rules` in pipelines.
-    """
-    for rule in RULES:
-        fact = rule(fact)
-    return fact
-
-
-# fold position of each join-based rule's mark set — later overwrites
-# earlier, so precedence is "highest rank wins", resolved together
-# with the pure-expression rules in one CASE below
-_RANKED_MARKS = [
-    (1, _qx_marks),  # R1
-    (2, _egreso_marks),  # R2
-    (3, _c1_marks),  # R3
-    (4, _c4_zero_marks),  # R4 invoice-membership zeroing (r13)
-    (7, _c5_marks),  # R7
-    (8, _qx1_marks),  # R8
-]
-
-
-def apply_rules(fact: DataFrame) -> DataFrame:
-    """Single-pass rule engine, same semantics as the sequential fold.
-
-    Every join-based rule's mark set is computed independently from the
-    SAME enriched frame (no rule reads another's ``validacion`` — they
-    only overwrite by fold position), unioned with its fold rank, and
-    reduced to the highest-ranked mark per row; the pure-expression
-    rules (R4/R5/R6/R9) interleave at their fold positions inside one
-    CASE. Physical shape: one shuffle for the (small, scoped) mark
-    union, ONE row-id join against the fact, and the FACTURA window for
-    the R4 invoice flag — versus the sequential fold's five full-fact
-    joins and 2^5 lineage copies.
-
-    The enriched input arrives PINNED from :func:`run_pipeline` (when
-    ``materialize_fact`` is on): the earlier recompute-per-mark design
-    — measured faster in r3, when the row-id shuffle still carried the
-    unfiltered fact — re-measured slower in r12 once the fact build was
-    pre-filtered (interleaved A/B at sf0.1: pinned 5.95 s vs recompute
-    6.75 s min-of-4). What pins is the month-scoped batch plus the
-    enrichment columns, not the raw input.
-    """
-    marks = None
-    for rank, mk in _RANKED_MARKS:
-        m = mk(fact).select(
+def _fold(fact: DataFrame, rules: Iterable[Rule]) -> DataFrame:
+    """Apply ``rules`` (an ordered subset of :data:`RULE_TABLE`) to
+    ``fact`` as one plan: the mark sets unioned with their rank, the
+    highest-ranked mark kept per row, ONE row-id join, one CASE."""
+    ranked = list(enumerate(rules, 1))
+    marks = [
+        rule.marks(fact).select(
             F.col(ROW_ID),
             F.lit(rank).alias("__mark_rank"),
             F.col("validacion").cast("int").alias("__mark_v"),
         )
-        marks = m if marks is None else marks.unionByName(m)
-    # each rule emits ≤1 mark per row id, ranks are distinct → max_by
-    # is deterministic
-    best = marks.groupBy(ROW_ID).agg(
-        F.max_by("__mark_v", "__mark_rank").alias("__mark_v"),
-        F.max("__mark_rank").alias("__mark_rank"),
-    )
-    # SHUFFLE_HASH hint (r13, guide §3.1): both sides are O(fact) so
-    # broadcast is unsafe, but the build side (the aggregated marks —
-    # 3 narrow columns) is far lighter per partition than the wide
-    # enriched fact, which a SortMergeJoin would SORT in full after its
-    # exchange. The hint keeps the exchange and drops both sorts; the
-    # build side's hash table holds only scoped-row marks.
-    out = fact.join(best.hint("shuffle_hash"), on=ROW_ID, how="left")
-
-    base4 = (F.col("AMBITO") == "CONSULTA EXTERNA") & (F.col("tipologia") == "C4")
-    cant = F.col("CANT_SERVICIO")
-    rank = F.col("__mark_rank")
-    v = (
-        # R9 Resonancia
-        F.when(F.col("tipologia") == "RM", cant)
-        # R8 parto/cesárea — covers ALL Qx1 rows, overwriting R1
-        .when(rank == 8, F.col("__mark_v"))
-        # R7 gap-fold marks on INGRESO-kept rows …
-        .when(rank == 7, F.col("__mark_v"))
-        # … and the zeroing of every other C5 row
-        .when(F.col("tipologia") == "C5", F.lit(0))
-        # R6 HD / ARI
-        .when(F.col("tipologia").isin("HD", "ARI"), F.lit(1))
-        # R5 C7 / C8
-        .when(F.col("tipologia") == "C7", cant)
-        .when(
-            (F.col("tipologia") == "C8") & (F.col("AMBITO") == "CONSULTA EXTERNA"),
-            cant,
+        for rank, rule in ranked
+        if rule.marks is not None
+    ]
+    if marks:
+        # each rule emits ≤1 mark per row id and ranks are distinct, so
+        # max_by is deterministic
+        best = reduce(DataFrame.unionByName, marks).groupBy(ROW_ID).agg(
+            F.max_by("__mark_v", "__mark_rank").alias("__mark_v"),
+            F.max("__mark_rank").alias("__mark_rank"),
         )
-        # R4 C4 chain (132P01-invoice zeroing first — it wins within
-        # R4; rank 4 ⇔ the row is in the zeroing scope AND its invoice
-        # has a 132P01 row — see _c4_zero_marks)
-        .when(rank == 4, F.lit(0))
-        .when(base4 & (F.col("SERVICIO") == "890502"), cant)
-        .when(base4 & (F.col("SERVICIO") != "890502"), F.lit(1))
-        # R3 / R2 membership marks (always 1)
-        .when(rank == 3, F.lit(1))
-        .when(rank == 2, F.lit(1))
-        # R1 capped marks (0 or 1 — scope rows are written either way)
-        .when(rank == 1, F.col("__mark_v"))
-        .otherwise(F.col("validacion"))
-    )
-    return out.withColumn("validacion", v).drop("__mark_rank", "__mark_v")
+        # both sides are O(fact), so broadcast is unsafe; the narrow
+        # aggregated marks build the hash table, and the hint spares the
+        # wide enriched fact the full sort a SortMergeJoin would need
+        fact = fact.join(best.hint("shuffle_hash"), on=ROW_ID, how="left")
+
+    v = None
+    for rank, rule in reversed(ranked):
+        hit = F.col("__mark_rank") == rank
+        for cond, value in rule.branches(hit, F.col("__mark_v")):
+            v = F.when(cond, value) if v is None else v.when(cond, value)
+    v = v.otherwise(F.col("validacion"))
+    return fact.withColumn("validacion", v).drop("__mark_rank", "__mark_v")
+
+
+def apply_rules(fact: DataFrame) -> DataFrame:
+    """The full rule engine: :func:`_fold` over every :data:`RULE_TABLE`
+    entry. Physical shape: one shuffle for the (small, scoped) mark
+    union and ONE shuffled-hash row-id join against the fact.
+
+    The enriched input arrives PINNED from :func:`run_pipeline`: the
+    earlier recompute-per-mark design re-measured slower once the fact
+    build was pre-filtered (interleaved A/B at sf0.1: pinned 5.95 s vs
+    recompute 6.75 s min-of-4). What pins is the month-scoped batch
+    plus the enrichment columns, not the raw input.
+    """
+    return _fold(fact, RULE_TABLE.values())
+
+
+# per-rule entry points: the fold over one table entry
+def rule_qx(fact: DataFrame) -> DataFrame:
+    return _fold(fact, [RULE_TABLE["qx"]])
+
+
+def rule_egreso(fact: DataFrame) -> DataFrame:
+    return _fold(fact, [RULE_TABLE["egreso"]])
+
+
+def rule_c1(fact: DataFrame) -> DataFrame:
+    return _fold(fact, [RULE_TABLE["c1"]])
+
+
+def rule_c4(fact: DataFrame) -> DataFrame:
+    return _fold(fact, [RULE_TABLE["c4"]])
+
+
+def rule_c7_c8(fact: DataFrame) -> DataFrame:
+    return _fold(fact, [RULE_TABLE["c7_c8"]])
+
+
+def rule_hd_ari(fact: DataFrame) -> DataFrame:
+    return _fold(fact, [RULE_TABLE["hd_ari"]])
+
+
+def rule_c5(fact: DataFrame) -> DataFrame:
+    return _fold(fact, [RULE_TABLE["c5"]])
+
+
+def rule_qx1(fact: DataFrame) -> DataFrame:
+    return _fold(fact, [RULE_TABLE["qx1"]])
+
+
+def rule_rm(fact: DataFrame) -> DataFrame:
+    return _fold(fact, [RULE_TABLE["rm"]])
 
 
 def comprobar(fact: DataFrame) -> DataFrame:
@@ -545,7 +504,6 @@ def run_pipeline(
     bases: DataFrame,
     mes: int,
     parse_dates: bool = True,
-    materialize_fact: bool | str = True,
 ) -> tuple[DataFrame, DataFrame]:
     """Full DAG: ingest filters → parse/cast → enrich → rules → project.
     Returns (capital_sendas, comprobar).
@@ -556,24 +514,21 @@ def run_pipeline(
     the graph nodes it realizes (tables, Condicion_*, Regla_*,
     Calculo_*). See :mod:`etl_sendas_spark.plans.lineage`.
 
-    ``materialize_fact`` pins the month-scoped, row-id'd fact as a
-    stage table before enrichment. The rule engine reads the fact from
-    5 mark sets + the main pass + comprobar; without the pin each
-    consumer re-executes the scan → row-number range shuffle → source
-    joins (measured 8.96 s vs 6.62 s at sf0.1). The month filter keeps
-    a small fraction of the input (7.8 % on the driver fact), so what
-    materializes is the scoped batch — the stage table the reference
-    itself writes between phases (``capital_sendas.py:600``) — not the
-    raw input.
+    The month-scoped, row-id'd fact is pinned as a stage table before
+    enrichment, and the enriched frame again before the rule engine.
+    The engine reads the fact from 6 mark sets + the main pass +
+    comprobar; without the pin each consumer re-executes the scan →
+    row-number range shuffle → source joins (measured 8.96 s vs 6.62 s
+    at sf0.1). The month filter keeps a small fraction of the input
+    (7.8 % on the driver fact), so what materializes is the scoped
+    batch — the stage table the reference itself writes between phases
+    (``capital_sendas.py:600``) — not the raw input.
 
-    The pin mechanism is pluggable (:mod:`..materialize`): ``True``
-    resolves the strategy from the ``spark.etl_sendas.materialize``
-    conf (default ``local`` = ``localCheckpoint``, fastest but not
-    fault-tolerant); pass ``"reliable"`` or ``"parquet"`` — or set the
-    conf — on a cluster so a lost executor can't kill the run. Set
-    False to keep the plan fully lazy (e.g. when a caller embeds this
-    DAG inside a larger optimized plan, or when the scoped batch is too
-    large to pin under executor storage and recompute is preferred).
+    The pin mechanism is :func:`..materialize.materialize`, selected by
+    the ``spark.etl_sendas.materialize`` conf: ``local`` (default,
+    ``localCheckpoint`` — fastest, not fault-tolerant), ``reliable`` or
+    ``parquet`` on a cluster so a lost executor can't kill the run, and
+    ``none`` to keep the plan fully lazy.
     """
     from ..materialize import materialize as _pin
     from .lineage import STAGES
@@ -587,26 +542,20 @@ def run_pipeline(
         "apply_rules": apply_rules,
         "finalize": finalize,
     }
-    _strategy = materialize_fact if isinstance(materialize_fact, str) else None
     for stage in STAGES:
         if stage.name == "enrich":
             if ROW_ID not in fact.columns:
                 # the rule engine threads row identity from here on
                 fact = with_row_id(fact)
-            if materialize_fact:
-                fact = _pin(fact, name="fact_stage", strategy=_strategy)
-        if stage.name == "apply_rules" and materialize_fact:
-            # Pin the ENRICHED frame too: the rule engine reads it from
-            # 5 mark sets + the main pass, and re-running the (broadcast)
-            # enrichment per consumer — the r3 decision, taken when the
-            # row-id shuffle still carried the unfiltered fact — now
-            # measures SLOWER than one wide pin of the month-scoped
-            # batch (r12 A/B at sf0.1, interleaved min-of-4:
-            # fact-only 6.75 s, fact+enriched 5.95 s; the enriched pin
-            # adds ~8 derived columns to rows already scoped to the
-            # month, so its footprint is the same order as the fact
-            # pin it sits on).
-            fact = _pin(fact, name="enriched_stage", strategy=_strategy)
+            fact = _pin(fact, name="fact_stage")
+        if stage.name == "apply_rules":
+            # Pin the ENRICHED frame too: re-running the (broadcast)
+            # enrichment per consumer measures SLOWER than one wide pin
+            # of the month-scoped batch (A/B at sf0.1, interleaved
+            # min-of-4: fact-only 6.75 s, fact+enriched 5.95 s; the
+            # enriched pin adds ~8 derived columns to rows already
+            # scoped to the month).
+            fact = _pin(fact, name="enriched_stage")
         if stage.name == "finalize":
             return impls[stage.name](fact), comprobar(fact)
         fact = impls[stage.name](fact)

@@ -51,21 +51,23 @@ CONDITIONS: dict[str, str] = {
 # --- red: validation rules -------------------------------------------------
 
 RULES: dict[str, str] = {
-    "Regla_quirofano": "plans.capital_sendas.rule_qx — R1 capped group mark (operators.marking.capped_group_mark)",
-    "Regla_egreso": "plans.capital_sendas.rule_egreso — R2 dual-key mark",
-    "Regla_ambulatorio": "plans.capital_sendas.rule_c1/rule_c4/rule_c7_c8 — R3/R4/R5 patient-day + invoice zeroing",
-    "Regla_hospital_dia": "plans.capital_sendas.rule_hd_ari — R6 (HD)",
-    "Regla_atencion_renal_integral": "plans.capital_sendas.rule_hd_ari — R6 (ARI)",
-    "Regla_urgencias_medicas": "plans.capital_sendas.rule_c5 — R7 gap-anchor fold (operators.marking.gap_anchor_mark)",
-    "Regla_quirofano_basico_parto_y_cesarea": "plans.capital_sendas.rule_qx1 — R8 first-flag",
-    "Regla_resonancia_nuclear_magnetica": "plans.capital_sendas.rule_rm — R9",
+    # bindings name entries of the ordered rule table; the per-rule
+    # entry points rule_<key> fold over that one entry
+    "Regla_quirofano": "plans.capital_sendas.RULE_TABLE[qx] — R1 capped group mark (operators.marking.capped_group_mark)",
+    "Regla_egreso": "plans.capital_sendas.RULE_TABLE[egreso] — R2 dual-key mark",
+    "Regla_ambulatorio": "plans.capital_sendas.RULE_TABLE[c1, c4, c7_c8] — R3/R4/R5 patient-day + invoice zeroing",
+    "Regla_hospital_dia": "plans.capital_sendas.RULE_TABLE[hd_ari] — R6 (HD)",
+    "Regla_atencion_renal_integral": "plans.capital_sendas.RULE_TABLE[hd_ari] — R6 (ARI)",
+    "Regla_urgencias_medicas": "plans.capital_sendas.RULE_TABLE[c5] — R7 gap-anchor fold (operators.marking.gap_anchor_mark)",
+    "Regla_quirofano_basico_parto_y_cesarea": "plans.capital_sendas.RULE_TABLE[qx1] — R8 first-flag",
+    "Regla_resonancia_nuclear_magnetica": "plans.capital_sendas.RULE_TABLE[rm] — R9",
 }
 
 # --- pink: scalar calculations --------------------------------------------
 
 CALCULATIONS: dict[str, str] = {
-    "Calculo_EDAD_1": "functions.dates.edad1 — age in years/months/days units",
-    "Calculo_EDAD_2": "functions.dates.edad2 — age unit label chain",
+    "Calculo_EDAD_1": "functions.dates.edad_valor — age in years/months/days units",
+    "Calculo_EDAD_2": "functions.dates.edad_unidad — age unit label chain",
     "Calculo_TIPOLOGIA_NOMBRE": "plans.capital_sendas.enrich — pediatric typology pick (F1/T4)",
 }
 

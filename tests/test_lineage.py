@@ -1,11 +1,14 @@
 """The lineage mirror (plans/lineage.py) must stay bound to running
-code: every stage names a real callable, every non-column graph node
+code: every stage names a real callable, every node binding resolves
+to an importable attribute, every non-column graph node
 from grafo_sendas.html:586 is claimed by exactly one stage family, and
 run_pipeline executes the stages in lineage order."""
 
 from __future__ import annotations
 
+import importlib
 import inspect
+import re
 
 from etl_sendas_spark.plans import capital_sendas, lineage
 
@@ -14,6 +17,21 @@ def test_every_stage_func_exists():
     for st in lineage.STAGES:
         fn = getattr(capital_sendas, st.func, None)
         assert callable(fn), f"stage {st.name}: no callable {st.func}"
+
+
+def test_every_binding_resolves():
+    """Each condition/rule/calculation binding leads with a dotted
+    ``module.attr`` under the package: it must import and resolve, and
+    any bracketed keys must name entries of that attribute."""
+    for table in (lineage.CONDITIONS, lineage.RULES, lineage.CALCULATIONS):
+        for node, binding in table.items():
+            m = re.match(r"([\w.]+)(?:\[([^\]]*)\])?", binding)
+            module, _, attr = m.group(1).rpartition(".")
+            mod = importlib.import_module(f"etl_sendas_spark.{module}")
+            obj = getattr(mod, attr, None)
+            assert obj is not None, f"{node}: {m.group(1)} does not resolve"
+            for key in filter(None, re.split(r",\s*", m.group(2) or "")):
+                assert key in obj, f"{node}: no entry {key!r} in {attr}"
 
 
 def test_no_unrealized_nodes():

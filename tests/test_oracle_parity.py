@@ -54,6 +54,7 @@ def parity_results(request, spark):
         }
     )
     tls = threading.local()
+    cons = []
 
     def work(name):
         try:
@@ -66,16 +67,21 @@ def parity_results(request, spark):
                             f"CREATE VIEW {t} AS SELECT * FROM '{path}'"
                         )
                 tls.con = con
+                cons.append(con)
             ours = _canon(ALL_QUERIES[name](spark, SF_ORACLE).toPandas())
             theirs = _canon(tls.con.execute(ALL_ORACLES[name]).df())
             return name, (ours, theirs, None)
-        except BaseException as e:  # noqa: BLE001 — re-raised in the test
+        except Exception as e:  # noqa: BLE001 — re-raised in the test
             return name, (None, None, e)
 
     out = {}
-    with ThreadPoolExecutor(max_workers=_N_PARITY_WORKERS) as pool:
-        for name, res in pool.map(work, names):
-            out[name] = res
+    try:
+        with ThreadPoolExecutor(max_workers=_N_PARITY_WORKERS) as pool:
+            for name, res in pool.map(work, names):
+                out[name] = res
+    finally:
+        for con in cons:
+            con.close()
     return out
 
 

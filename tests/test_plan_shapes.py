@@ -180,7 +180,7 @@ def test_update_then_merge_shuffles_one_join_only(spark):
 
 
 def test_flagship_reads_fact_from_stage_table_not_rescans(spark):
-    """After the materialize_fact pin, the flagship's executed plan must
+    """After run_pipeline's fact-stage pin, the flagship's executed plan must
     contain NO fact-table parquet scans: the 7 fact consumers (5 mark
     sets, main pass, comprobar) all read the checkpointed stage table.
     The only parquet scan allowed is the tiny ``bases`` dim (customer,

@@ -168,6 +168,24 @@ def test_rule_c4_case_chain_and_invoice_zeroing(spark):
     assert got == {0: 1, 1: 4, 2: 0, 3: 0, 4: 0, 5: 1, 6: 0}
 
 
+def test_rule_c4_null_invoice_zeroing(spark):
+    # The reference fills FACTURA with '' before the 132P01 invoice
+    # membership test (:431-456), so NULL invoices form one group: a
+    # NULL-invoice invalidable C4 row is zeroed when another
+    # NULL-invoice row carries 132P01.
+    CE = "CONSULTA EXTERNA"
+    rows = [
+        {"FACTURA": None, "AMBITO": "URGENCIAS", "tipologia": "C2", "SERVICIO": "132P01"},  # 0 → 0 (no rule)
+        {"FACTURA": None, "AMBITO": CE, "tipologia": "C4", "SERVICIO": "890285", "CANT_SERVICIO": 2},  # 1 → 0 (zeroed)
+        {"FACTURA": None, "AMBITO": CE, "tipologia": "C4", "SERVICIO": "890502", "CANT_SERVICIO": 6},  # 2 → 0 (zeroed)
+        {"FACTURA": None, "AMBITO": CE, "tipologia": "C4", "SERVICIO": "777777", "CANT_SERVICIO": 1},  # 3 → 1 (not invalidable)
+        # a named invoice without 132P01 is not dragged into the NULL group
+        {"FACTURA": "F9", "AMBITO": CE, "tipologia": "C4", "SERVICIO": "890502", "CANT_SERVICIO": 6},  # 4 → 6
+    ]
+    got = flags(apply_rules(fact_df(spark, rows)))
+    assert got == {0: 0, 1: 0, 2: 0, 3: 1, 4: 6}
+
+
 # ---------------------------------------------------------------------------
 # R7 Consultorio urgencias C5 (reference :484-543)
 # ---------------------------------------------------------------------------

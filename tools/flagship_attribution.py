@@ -2,17 +2,17 @@
 """Attribute the flagship's scaling growth: how much of
 ``sendas_full_pipeline``'s wall time is the R7 gap-fold (the engine's
 one Python/mapInPandas stage) vs everything else (mark-union shuffle,
-row-id join, FACTURA window, broadcast enrichment)?
+row-id join, R4 invoice semi-join, broadcast enrichment)?
 
     python tools/flagship_attribution.py [factor ...]
 
 For each factor, builds the replicated dataset (same generator as
 tools/scale_bench.py) and times the flagship twice: the full rule set,
-and with R7 removed from ``_RANKED_MARKS`` (so its mark set — the
-mapInPandas fold plus its INGRESO dedup feeder — drops out of the
-plan while every other rule keeps its fold position). The delta is
-R7's marginal cost at that scale. min of 2 runs after a warmup, noop
-sink, fresh session per factor.
+and with the R7 entry filtered out of ``RULE_TABLE`` (so its mark set
+— the mapInPandas fold plus its INGRESO dedup feeder — and its C5
+zeroing drop out of the plan while every other rule keeps its relative
+fold order). The delta is R7's marginal cost at that scale. min of 2
+runs after a warmup, noop sink, fresh session per factor.
 """
 
 from __future__ import annotations
@@ -45,8 +45,8 @@ def main() -> int:
     factors = [int(a) for a in sys.argv[1:]] or [10]
     src_dir = "/root/testdata/sf0.1"
     out: dict[str, dict] = {}
-    full_marks = list(cs._RANKED_MARKS)
-    no_r7 = [(rank, mk) for rank, mk in full_marks if rank != 7]
+    full_table = cs.RULE_TABLE
+    no_r7 = {key: rule for key, rule in full_table.items() if key != "c5"}
 
     for factor in factors:
         data_dir = f"/tmp/sendas_scale_x{factor}"
@@ -69,13 +69,13 @@ def main() -> int:
                 run()
             entry["full"] = timed(run, runs=runs)
         if variant in ("no_r7", "both"):
-            cs._RANKED_MARKS = no_r7
+            cs.RULE_TABLE = no_r7
             try:
                 if warmup:
                     run()
                 entry["no_r7"] = timed(run, runs=runs)
             finally:
-                cs._RANKED_MARKS = full_marks
+                cs.RULE_TABLE = full_table
         if "full" in entry and "no_r7" in entry:
             entry["r7_marginal"] = round(entry["full"] - entry["no_r7"], 3)
             entry["r7_share"] = round(entry["r7_marginal"] / entry["full"], 3)
